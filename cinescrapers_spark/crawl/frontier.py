@@ -17,22 +17,20 @@ source iff MAX(last_updated) older than 5 days) and its per-site page caps
 * selection = top-budget per host by ``(priority DESC, url_hash ASC)`` —
   a total order, so the schedule is a pure function of the frontier
   snapshot (determinism is a schema property, SURVEY §7.3);
-* skew kill + single shuffle: selection runs as a NARROW partial top-k
-  per input partition (Arrow kernel, no exchange — any partition emits at
-  most budget rows per host it holds, bounding mega-domains at the
-  source), then ONE per-host window over the ≤ partitions×budget
-  survivors. The partial pass never drops a row the global pass would
-  keep (a member of the host-global top-B is in its own partition's
-  top-B), so the result is exactly the declared total order — the same
-  argument as plans/similarity.partitioned_topk.
+* skew kill + single shuffle: ONE per-host window, filtered by ``rank <=
+  budget`` and the redundant literal ``rank <= max_per_tick`` (exact: the
+  budget is least(max_per_tick, …)). The literal lets Spark's
+  ``InferWindowGroupLimit`` plant a JVM ``WindowGroupLimit … Partial``
+  below the host exchange: a partition emits ≤ max_per_tick rows per host
+  it holds, bounding mega-domains at the source. This pre-pass applies only
+  while ``max_per_tick`` ≤ ``spark.sql.optimizer.windowGroupLimitThreshold``
+  (default 1000); above it Spark runs the plain window — exact, no pre-pass.
 """
 
 from __future__ import annotations
 
 import random
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -299,8 +297,8 @@ def schedule_tick(
     """Select this tick's fetch set: eligible rows (priority>0: pending or
     stale, not permanently failed, not robots-blocked, within the crawl
     depth cap — the reference's keep-first-N-pages bounds,
-    barbican/scrape.py:25), top-budget per host in ONE shuffle via
-    partial-then-global top-k."""
+    barbican/scrape.py:25), top-budget per host in ONE shuffle via a
+    JVM partial group limit, then the per-host window."""
     scored = with_priority(frontier, tick, staleness_ticks).filter(
         F.col("priority") > 0
     )
@@ -311,27 +309,10 @@ def schedule_tick(
     scored = scored.withColumn(
         "__budget", host_budget_col(tick_seconds, max_per_tick)
     )
-    schema = scored.schema
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # narrow pre-pass: at most budget rows per host leave any batch —
-        # a mega-domain never funnels its full row set into the window
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf
-                continue
-            pdf = pdf.sort_values(
-                ["host", "priority", "url_hash"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            rank = pdf.groupby("host", sort=False).cumcount()
-            yield pdf[rank < pdf["__budget"]]
-
-    survivors = scored.mapInPandas(partial_topk, schema=schema)
     w_host = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_hash"))
+    rank = F.col("__r")
     return (
-        survivors.withColumn("__r", F.row_number().over(w_host))
-        .filter(F.col("__r") <= F.col("__budget"))
+        scored.withColumn("__r", F.row_number().over(w_host))
+        .filter((rank <= F.col("__budget")) & (rank <= max_per_tick))
         .drop("__r", "__budget")
     )

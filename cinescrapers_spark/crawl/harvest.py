@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from cinescrapers_spark.crawl.seen import SeenSet
 from cinescrapers_spark.crawl.snapshots import SnapshotTable
 from cinescrapers_spark.schemas import IMAGES
+from cinescrapers_spark.session import local_frame
 
 CARD_SCHEMA = "url string, caption string, url_hash long"
 
@@ -186,7 +187,7 @@ class ImageHarvester:
             if as_of is None or e["tick"] <= as_of
         ]
         if not entries:
-            return spark.createDataFrame([], IMAGES)
+            return local_frame(spark, [], IMAGES)
         return spark.read.schema(IMAGES).parquet(
             *[self.table.snapshot_dir(e["snapshot_id"]) for e in entries]
         )

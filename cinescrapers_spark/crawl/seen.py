@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cinescrapers_spark.crawl.snapshots import SnapshotTable
+from cinescrapers_spark.session import local_frame
 
 SHARD_SCHEMA = "shard_id int, data binary, n_keys long"
 
@@ -65,7 +66,8 @@ def encode_shard(keys: np.ndarray, bloom: np.ndarray) -> bytes:
 
 
 def decode_shard(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    assert blob[:5] == _MAGIC, "bad shard blob"
+    if blob[:5] != _MAGIC:
+        raise ValueError(f"bad shard blob: magic {bytes(blob[:5])!r}, want {_MAGIC!r}")
     off = 5
     (nb,) = struct.unpack_from("<q", blob, off)
     off += 8
@@ -129,6 +131,13 @@ def _membership(blobs: list[bytes], h: np.ndarray) -> np.ndarray:
     return seen
 
 
+def _null_first(col: pd.Series) -> np.ndarray:
+    """``col`` behind one null; non-floats become objects: ints stay exact."""
+    if col.dtype.kind == "f":
+        return np.concatenate([[np.nan], col.to_numpy()])
+    return np.concatenate([np.array([None]), col.to_numpy(dtype=object)])
+
+
 class SeenSet:
     """Sharded seen-set backed by a SnapshotTable of binary shard blobs,
     committed as per-tick runs with periodic base compaction."""
@@ -170,7 +179,7 @@ class SeenSet:
     def _state_df(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         entries = self._entries_as_of(as_of)
         if not entries:
-            return spark.createDataFrame([], SHARD_SCHEMA)
+            return local_frame(spark, [], SHARD_SCHEMA)
         dirs = [self.table.snapshot_dir(e["snapshot_id"]) for e in entries]
         return spark.read.schema(SHARD_SCHEMA).parquet(*dirs)
 
@@ -282,23 +291,16 @@ class SeenSet:
             fresh = np.sort(fresh_rows[hname].to_numpy().astype(np.uint64))
             bloom = np.zeros(bloom_bytes, dtype=np.uint8)
             bloom_add(bloom, fresh)
-            shard_row = pd.DataFrame(
+            n = len(fresh_rows)
+            return pd.DataFrame(
                 {
-                    "__kind": ["shard"],
-                    "shard_id": [shard_id],
-                    "data": [encode_shard(fresh, bloom)],
-                    "n_keys": [len(fresh)],
-                    **{c: [None] for c in cand_cols},
+                    "__kind": ["shard"] + ["url"] * n,
+                    "shard_id": pd.Series([shard_id] + [None] * n, dtype=object),
+                    "data": [encode_shard(fresh, bloom)] + [None] * n,
+                    "n_keys": pd.Series([len(fresh)] + [None] * n, dtype=object),
+                    **{c: _null_first(fresh_rows[c]) for c in cand_cols},
                 }
             )
-            url_rows = fresh_rows.copy()
-            url_rows["__kind"] = "url"
-            url_rows["shard_id"] = None
-            url_rows["data"] = None
-            url_rows["n_keys"] = None
-            return pd.concat([shard_row, url_rows], ignore_index=True)[
-                ["__kind", "shard_id", "data", "n_keys"] + cand_cols
-            ]
 
         fused_out = (
             cand.groupBy("__shard")

@@ -18,6 +18,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 
 from cinescrapers_spark.schemas import CINEMA, HOST
+from cinescrapers_spark.session import local_frame
 
 # (shortcode, scraper_name, url) — public facts from the reference
 # (cinema_details.py:3-274 / scrapers/*). Also the bench seed list.
@@ -83,7 +84,7 @@ def cinema_rows(seed: int = 42) -> list[dict]:
 
 
 def cinemas_df(spark: SparkSession, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(cinema_rows(seed), schema=CINEMA)
+    return local_frame(spark, cinema_rows(seed), CINEMA)
 
 
 def seed_hosts() -> list[str]:
@@ -117,4 +118,4 @@ def hosts_df(
                 "max_per_tick": default_budget,
             }
         )
-    return spark.createDataFrame(rows, schema=HOST)
+    return local_frame(spark, rows, HOST)

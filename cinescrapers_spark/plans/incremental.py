@@ -50,6 +50,7 @@ from cinescrapers_spark.plans.dedup import (
     _bands,
     _tokens,
 )
+from cinescrapers_spark.session import local_frame
 
 BANDS_COLS = ["doc_id", "source", "band_id", "band_hash"]
 TOKS_COLS = ["doc_id", "source", "thash", "ntoks"]
@@ -274,7 +275,7 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
         schema = res.schema
         for o in outs:
             o.unpersist()
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from cinescrapers_spark.crawl.snapshots import SnapshotTable
 from cinescrapers_spark.plans.dedup import connected_components
+from cinescrapers_spark.session import local_frame
 
 NODES_COLS = ["doc_id", "comp"]
 ROOTS_COLS = ["comp", "root"]
@@ -195,9 +196,7 @@ class IncrementalComponents:
             entries = self._prune_by_bloom(spark, entries, for_ids)
         nodes = self._runs(spark, self.nodes_table, upto, entries=entries)
         if nodes is None:
-            return spark.createDataFrame(
-                [], "doc_id long, component_id long"
-            )
+            return local_frame(spark, [], "doc_id long, component_id long")
         if for_ids is not None:
             nodes = nodes.join(
                 F.broadcast(for_ids.select("doc_id").distinct()), "doc_id"
@@ -296,7 +295,7 @@ class IncrementalComponents:
         # entries, add merge entries for labels that were themselves roots
         old_roots = self._latest_roots(spark, tick - 1)
         if old_roots is None:
-            old_roots = spark.createDataFrame([], "comp long, root long")
+            old_roots = local_frame(spark, [], "comp long, root long")
         remapped = (
             old_roots.join(
                 merge, old_roots.root == F.col("old_root"), "left"
@@ -340,7 +339,7 @@ class IncrementalComponents:
             bloom_col="doc_id",
         )
         self.roots_table.commit(
-            spark.createDataFrame([], "comp long, root long"),
+            local_frame(spark, [], "comp long, root long"),
             tick=tick,
             row_count=-2,
             tag="roots",

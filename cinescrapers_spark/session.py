@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -70,3 +73,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Rows held in Python as a JVM-side DataFrame: Arrow, or a typed
+    ``range(0)`` when empty — never a Python RDD (``createDataFrame(list)``),
+    which starts Python tasks on every read, each broadcast-join re-run too."""
+    schema = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    if rows:
+        return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    nulls = [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    return spark.range(0).select(*nulls)

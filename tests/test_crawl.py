@@ -37,6 +37,18 @@ def test_shard_codec_roundtrip():
     assert fpr < 0.05
 
 
+def test_decode_shard_rejects_corrupt_blob():
+    """A blob whose magic bytes are wrong must raise an explicit error —
+    under ``python -O`` an assert would vanish and the garbage would be
+    read as keys."""
+    keys = np.arange(10, dtype=np.uint64)
+    blob = encode_shard(keys, np.zeros(64, dtype=np.uint8))
+    with pytest.raises(ValueError, match="bad shard blob"):
+        decode_shard(b"XXXXX" + blob[5:])
+    with pytest.raises(ValueError, match="bad shard blob"):
+        decode_shard(b"")
+
+
 def test_seen_set_probe_insert(spark, tmp_path):
     from pyspark.sql import functions as F
 

@@ -1,14 +1,17 @@
 """Physical-plan shape gates: the properties that make queries survive a
 100× scale-up are asserted on explain() output, not just prose —
 predicate pushdown reaches the parquet scan, small dims broadcast, the
-ANN top-k keeps its salted pre-pass, and nothing compiles to a
-non-broadcast cartesian product.
+ANN top-k keeps its salted pre-pass, the crawl schedule's top-k pre-pass
+stays in the JVM, and nothing compiles to a non-broadcast cartesian
+product. Frames built from Python-side rows are checked for a Python RDD
+in their lineage: reading one starts Python workers on every use.
 """
 
 import contextlib
 import io
 import re
 
+import pandas as pd
 import pytest
 
 from cinescrapers_spark.plans import registry
@@ -129,3 +132,80 @@ def test_lsh_verify_joins_never_shuffle_corpus(spark, sf_dir):
         )
         assert "Exchange" not in tree_line
     assert "Exchange" in plan  # the candidate side still shuffles
+
+
+def _python_rdd_free(df) -> bool:
+    return "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_schedule_topk_prepass_runs_in_jvm(spark, tmp_path):
+    """schedule_tick's per-host top-k must plan a ``WindowGroupLimit`` in
+    Partial mode below the host exchange (the skew guard) and no Python
+    map stage; the host dimension it joins must not be a Python RDD."""
+    from cinescrapers_spark.crawl.frontier import (
+        init_frontier,
+        schedule_tick,
+        synthetic_seed_urls,
+    )
+    from cinescrapers_spark.dims import hosts_df
+
+    hosts = hosts_df(spark, extra_hosts=["megacinema.example.com"])
+    seeds = spark.createDataFrame(pd.DataFrame(synthetic_seed_urls(200, seed=3)))
+    frontier = init_frontier(spark, seeds, hosts)
+    frontier.write.parquet(str(tmp_path / "frontier"))
+    frontier = spark.read.parquet(str(tmp_path / "frontier"))
+    sched = schedule_tick(
+        frontier, 1, max_per_tick=5, robots=hosts.select("host", "robots_disallow")
+    )
+    per_host = sched.groupBy("host").count().collect()
+    assert per_host and max(r["count"] for r in per_host) <= 5
+    sched.collect()
+    plan = sched._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"WindowGroupLimit .*Partial", plan), plan
+    assert "MapInPandas" not in plan, plan
+    assert _python_rdd_free(sched)
+
+
+def test_local_frames_have_no_python_rdd(spark, sf_dir, tmp_path, monkeypatch):
+    """Dimensions, empty LSM states and collected results are built in the
+    JVM (Arrow, or a typed empty projection), never as a Python RDD — a
+    silent fallback from the Arrow path fails here."""
+    from cinescrapers_spark.crawl.harvest import ImageHarvester
+    from cinescrapers_spark.crawl.seen import SeenSet
+    from cinescrapers_spark.crawl.snapshots import SnapshotTable
+    from cinescrapers_spark.dims import CINEMA_SITES, cinemas_df, hosts_df, seed_hosts
+    from cinescrapers_spark.plans import incremental
+    from cinescrapers_spark.plans.incremental_cc import IncrementalComponents
+
+    seen = SeenSet(SnapshotTable(str(tmp_path / "seen")))
+    frames = {
+        "hosts_df": hosts_df(spark, extra_hosts=["megacinema.example.com"]),
+        "cinemas_df": cinemas_df(spark),
+        "seen._state_df": seen._state_df(spark),
+        "harvest.read": ImageHarvester(str(tmp_path / "harvest")).read(spark),
+        "incremental_cc.labels": IncrementalComponents(str(tmp_path / "cc0")).labels(
+            spark
+        ),
+        "q_dedup_incremental": incremental.q_dedup_incremental(spark, sf_dir),
+    }
+    # add_pairs (no parent roots yet) and compact each commit a roots run
+    # built on an empty frame
+    cc = IncrementalComponents(str(tmp_path / "cc"))
+    commit = cc.roots_table.commit
+
+    def spy(df, tick, **kw):
+        frames[f"incremental_cc.roots@{tick}"] = df
+        return commit(df, tick, **kw)
+
+    monkeypatch.setattr(cc.roots_table, "commit", spy)
+    pairs = spark.createDataFrame(
+        pd.DataFrame([(1, 2), (2, 3)], columns=["doc_a", "doc_b"])
+    )
+    cc.add_pairs(pairs, tick=1)
+    cc.compact(spark, tick=2)
+    assert {"incremental_cc.roots@1", "incremental_cc.roots@2"} <= set(frames)
+    assert frames["hosts_df"].count() == len(seed_hosts()) + 1
+    assert frames["cinemas_df"].count() == len(CINEMA_SITES)
+    assert frames["q_dedup_incremental"].count() > 0
+    bad = [name for name, df in frames.items() if not _python_rdd_free(df)]
+    assert not bad, f"Python RDD in the lineage of {bad}"
